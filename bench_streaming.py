@@ -107,7 +107,6 @@ def main() -> None:
     spark = get_spark(
         app_name="l2c-spark-stream-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=32,
         extra_conf={"spark.ui.enabled": "false",
                     "spark.ui.showConsoleProgress": "false",
                     "spark.driver.memory": "16g"},

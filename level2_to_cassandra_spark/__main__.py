@@ -5,7 +5,7 @@ The reference ships three binaries dispatched by ``start.sh:3-14`` on
 docker-compose.yaml:6-15).  This module is the drop-in equivalent: read
 the same env surface (:meth:`PipelineConfig.from_env`), build the
 engine session, attach a source, start the Structured Streaming
-pipeline, block until termination.
+pipeline, supervise its queries until they end.
 
 Source selection (``--source``, or ``L2C_SOURCE`` env, default auto):
 
@@ -20,7 +20,8 @@ Source selection (``--source``, or ``L2C_SOURCE`` env, default auto):
 ``--drain`` switches the trigger to ``availableNow``: consume whatever
 the bounded source holds, checkpoint, exit 0 — replay/backfill/CI
 semantics.  Without it the daemon micro-batches forever, matching the
-reference's blocking recv loop (main.rs:219-230).
+reference's blocking recv loop (main.rs:219-230).  Either way, a query
+that fails stops the others and the daemon exits 1.
 """
 
 from __future__ import annotations
@@ -249,12 +250,45 @@ def main(argv: list[str] | None = None) -> int:
     else:
         envelope = sources.rate_envelope(spark, args.rate)
 
+    # forget terminations of earlier queries on a reused session, so
+    # the supervisor below wakes only for this pipeline's
+    spark.streams.resetTerminated()
     queries = build_streaming_pipeline(
         envelope, cfg, trigger_available_now=args.drain
     )
-    for q in queries:
-        q.awaitTermination()
-    return 0
+    return _supervise(spark, queries)
+
+
+def _supervise(spark, queries: list) -> int:
+    """Block until every query has ended; 0 if all ended cleanly.
+
+    The first query to fail stops its siblings and returns 1, so a
+    failed tick or DLQ query cannot go unnoticed while the daemon
+    waits on book.  A clean end (an ``availableNow`` drain finishing)
+    keeps the supervisor waiting on the rest."""
+    from pyspark.errors import StreamingQueryException
+
+    while True:
+        try:
+            spark.streams.awaitAnyTermination()
+        except StreamingQueryException:
+            pass  # reported below with the query it belongs to
+        # a query that ends after this reset wakes the next wait; one
+        # that ended before it is inactive in the checks below
+        spark.streams.resetTerminated()
+        failed = [q for q in queries
+                  if not q.isActive and q.exception() is not None]
+        live = [q for q in queries if q.isActive]
+        if failed:
+            for q in failed:
+                cause = str(q.exception()).partition("\n")[0]
+                print(f"error: streaming query {q.name or q.id} failed: "
+                      f"{cause}", file=sys.stderr)
+            for q in live:
+                q.stop()
+            return 1
+        if not live:
+            return 0
 
 
 if __name__ == "__main__":

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from level2_to_cassandra_spark.functions import positive_or_none
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -155,10 +157,9 @@ def staging_buckets(spark: SparkSession) -> int:
     local[N] gets N, a cluster gets its core count), overridable with
     $SPARK_GRAFT_STAGING_BUCKETS for production layouts where buckets
     should track data volume rather than momentary cluster width."""
-    env = os.environ.get("SPARK_GRAFT_STAGING_BUCKETS")
-    if env:
-        return int(env)
-    return int(spark.sparkContext.defaultParallelism)
+    n = positive_or_none(os.environ.get("SPARK_GRAFT_STAGING_BUCKETS"),
+                         "SPARK_GRAFT_STAGING_BUCKETS")
+    return n or int(spark.sparkContext.defaultParallelism)
 
 
 def materialize_once_bucketed(cache: dict, spark, sf_dir: str,

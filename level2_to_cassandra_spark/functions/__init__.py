@@ -50,15 +50,21 @@ def round_signless_sql(expr: str, scale: int) -> str:
 
 
 def positive_or_none(raw: str | None, name: str) -> int | None:
-    """Validate a trigger-cap setting: a positive int, or None/'' for
-    unset.  '0' is a truthy STRING, so `int(raw) if raw else None`
-    shipped 0 through to the source, where a 0-file/0-offset cap
-    silently stops the stream from progressing (ADVICE r07 low).  ONE
-    definition shared by the l2wire source and PipelineConfig.from_env
-    so the two surfaces cannot drift (self-review r09)."""
+    """Validate a positive-int setting (trigger caps, staging buckets):
+    a positive int, or None/'' for unset; anything else raises a
+    ValueError that names the setting.  '0' is a truthy STRING, so
+    `int(raw) if raw else None` shipped 0 through to the source, where
+    a 0-file/0-offset cap silently stops the stream from progressing
+    (ADVICE r07 low).  ONE definition shared by the l2wire source,
+    PipelineConfig.from_env and catalog.staging_buckets so the
+    surfaces cannot drift (self-review r09)."""
     if raw is None or raw == "":
         return None
-    value = int(raw)
+    error = ValueError(f"{name} must be a positive integer, got {raw!r}")
+    try:
+        value = int(raw)
+    except ValueError:
+        raise error from None
     if value < 1:
-        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+        raise error
     return value

@@ -16,6 +16,7 @@ not engine semantics).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -211,6 +212,29 @@ def build_batch_pipeline(envelope: DataFrame,
     return out
 
 
+def stream_shuffle_partitions(spark: SparkSession) -> int:
+    """Shuffle width the daemon's streams start with: one partition,
+    and so one state store, per core the cluster offers.  A site that
+    wants another width sets Spark's own ``spark.default.parallelism``."""
+    return int(spark.sparkContext.defaultParallelism)
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set ``key`` on the session inside the block, then restore the
+    caller's value, or its absence.  Session-wide: a batch job another
+    thread runs on the same session inside the block sees ``value``."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
                              trigger_available_now: bool = True) -> list:
     """Start writeStream queries per mode; returns StreamingQuery list.
@@ -224,10 +248,28 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
     timeouts, because its state dies with the query and a pending
     processing-time timeout would hold the drain open in empty
     state-cleanup micro-batches until the timeout fired.
-    """
-    queries = []
 
-    def _start(df: DataFrame, suffix: str):
+    Shuffle width: every query starts with
+    ``spark.sql.shuffle.partitions`` set to the cluster's
+    ``defaultParallelism`` (:func:`stream_shuffle_partitions`).
+    Structured Streaming turns adaptive execution off inside a stream,
+    so the session's width (200 by default) would run as 200 real tasks
+    and 200 state-store instances per micro-batch for a handful of
+    (symbol, day) keys.  A stream copies the session when it starts,
+    so the one setting sizes the stateful operator's store count and
+    every exchange inside the foreachBatch sinks (``upsert_dedup``, the
+    sink's ``repartition``, the metrics aggregate).  The caller's
+    session gets its own value back before this function returns.
+
+    A checkpoint pins the width it was created with: Spark restores
+    ``spark.sql.shuffle.partitions`` from the offset log on restart,
+    because the state store is partitioned by it.  Resizing a running
+    deployment therefore means a new checkpoint directory, or setting
+    ``spark.default.parallelism`` before the first start.
+    """
+    writers = []
+
+    def _writer(df: DataFrame, suffix: str):
         if cfg.sink == "cassandra":
             from level2_to_cassandra_spark.streaming.sink import (
                 foreach_batch_cassandra,
@@ -255,14 +297,14 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
         )
         if trigger_available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return writer
 
     if cfg.mode in ("book", "full"):
-        queries.append(_start(book_rows(envelope, cfg), "book"))
+        writers.append(_writer(book_rows(envelope, cfg), "book"))
     if cfg.mode in ("tick", "full"):
         ttl = None if trigger_available_now else 36
-        queries.append(
-            _start(
+        writers.append(
+            _writer(
                 tick_rows_streaming(envelope, cfg, state_ttl_hours=ttl),
                 "tick",
             )
@@ -292,8 +334,11 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
         )
         if trigger_available_now:
             writer = writer.trigger(availableNow=True)
-        queries.append(writer.start())
-    return queries
+        writers.append(writer)
+    spark = envelope.sparkSession
+    with _session_conf(spark, "spark.sql.shuffle.partitions",
+                       str(stream_shuffle_partitions(spark))):
+        return [w.start() for w in writers]
 
 
 def kafka_envelope(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:

@@ -74,38 +74,51 @@ def _with_day(ticks: DataFrame) -> DataFrame:
     return ticks.withColumn("day", F.to_date("time"))
 
 
+def _running_sums(pdfs: Iterator[pd.DataFrame], cumbuy: int,
+                  cumsell: int) -> pd.DataFrame:
+    """Replay the reference's per-tick fold (main.rs:122-130) over one
+    (symbol, day) group's rows of a micro-batch, continuing from the
+    stored ``(cumbuy, cumsell)``.  The group's Arrow chunks are joined
+    BEFORE the event-time sort: a group larger than
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` arrives as several
+    chunks in arrival order, so sorting each chunk on its own would
+    fold a late chunk's earlier ticks after an early chunk's later
+    ones."""
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
+    pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    buys = (pdf["trade_type"] == BUY) * pdf["volume"]
+    sells = (pdf["trade_type"] == SELL) * pdf["volume"]
+    pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
+    pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
+    pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
+    return pdf
+
+
 def _cum_update_factory(ttl_ms: int | None):
-    """Build the per-(symbol, day) state-update function: replay the
-    reference's per-tick fold (main.rs:122-130) over the micro-batch,
-    sorted by event time for in-batch determinism.  ``ttl_ms`` arms a
-    processing-time timeout that expires idle day keys (continuous
-    deployments); ``None`` leaves timeouts unset (bounded drains)."""
+    """Build the per-(symbol, day) state-update function over
+    :func:`_running_sums`.  ``ttl_ms`` arms a processing-time timeout
+    that expires idle day keys (continuous deployments); ``None``
+    leaves timeouts unset (bounded drains)."""
 
     def _cum_update(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            # an idle day key reached its TTL: Spark calls with no rows
+            state.remove()
+            return
         cumbuy, cumsell = state.get if state.exists else (0, 0)
-        out = []
-        for pdf in pdfs:
-            sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            buys = (pdf["trade_type"] == BUY) * pdf["volume"]
-            sells = (pdf["trade_type"] == SELL) * pdf["volume"]
-            pdf = pdf.copy()
-            pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
-            pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
-            pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
-            cumbuy = int(pdf["cumbuy"].iloc[-1])
-            cumsell = int(pdf["cumsell"].iloc[-1])
-            out.append(pdf)
-        state.update((cumbuy, cumsell))
+        pdf = _running_sums(pdfs, cumbuy, cumsell)
+        state.update((int(pdf["cumbuy"].iloc[-1]),
+                      int(pdf["cumsell"].iloc[-1])))
         if ttl_ms is not None:
             # Key = (symbol, day): a new day is a fresh key ⇒ implicit
             # daily reset; expired days drop after ttl of no activity.
             state.setTimeoutDuration(ttl_ms)
-        yield from out
+        yield pdf
 
     return _cum_update
 
@@ -147,18 +160,10 @@ def cumulative_streaming_tws(ticks: DataFrame) -> DataFrame:
             cumbuy, cumsell = (
                 self._state.get() if self._state.exists() else (0, 0)
             )
-            for pdf in rows:
-                sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
-                pdf = pdf.sort_values(sort_cols, kind="mergesort").copy()
-                buys = (pdf["trade_type"] == BUY) * pdf["volume"]
-                sells = (pdf["trade_type"] == SELL) * pdf["volume"]
-                pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
-                pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
-                pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
-                cumbuy = int(pdf["cumbuy"].iloc[-1])
-                cumsell = int(pdf["cumsell"].iloc[-1])
-                yield pdf
-            self._state.update((cumbuy, cumsell))
+            pdf = _running_sums(rows, cumbuy, cumsell)
+            self._state.update((int(pdf["cumbuy"].iloc[-1]),
+                                int(pdf["cumsell"].iloc[-1])))
+            yield pdf
 
         def close(self) -> None:
             pass

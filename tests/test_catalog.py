@@ -18,6 +18,7 @@ from level2_to_cassandra_spark.catalog import (
     TABLES,
     load_table,
     register_temp_views,
+    staging_buckets,
     table_path,
 )
 
@@ -137,6 +138,20 @@ def test_register_temp_views_only_subset(spark):
 def test_unknown_table_rejected(spark):
     with pytest.raises(KeyError):
         load_table(spark, SF_SMOKE, "nope")
+
+
+def test_staging_buckets_env_validated(spark, monkeypatch):
+    """$SPARK_GRAFT_STAGING_BUCKETS: unset follows the cluster's
+    parallelism, a positive int wins, and anything else is refused by
+    name instead of reaching the bucketed writer."""
+    monkeypatch.delenv("SPARK_GRAFT_STAGING_BUCKETS", raising=False)
+    assert staging_buckets(spark) == spark.sparkContext.defaultParallelism
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_BUCKETS", "6")
+    assert staging_buckets(spark) == 6
+    for bad in ("0", "x"):
+        monkeypatch.setenv("SPARK_GRAFT_STAGING_BUCKETS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STAGING_BUCKETS"):
+            staging_buckets(spark)
 
 
 def test_embeddings_dim_matches_oracle_assumption(spark):

@@ -88,6 +88,36 @@ def test_daemon_restart_recovers_state_from_checkpoint(
     assert rows == {"2023-11-14T22:13:20": 5.0, "2023-11-14T22:14:20": 12.0}
 
 
+def test_daemon_exits_nonzero_when_a_query_fails(
+        spark, capture_dir, tmp_path, monkeypatch):
+    """Supervision: a continuous daemon whose tick query fails (its
+    sink path is a regular file, so the first batch's write fails)
+    must stop the book query and exit 1, not wait on book forever."""
+    import threading
+
+    out = tmp_path / "keyspace"
+    out.mkdir()
+    (out / "tick").write_text("not a directory")
+    monkeypatch.setenv("APP_MODE", "full")
+    monkeypatch.setenv("KEYSPACE", str(out))
+    monkeypatch.setenv("CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    monkeypatch.delenv("API_ADDRESS", raising=False)
+
+    rc = []
+    t = threading.Thread(target=lambda: rc.append(
+        main(["--source", "wire", "--input", str(capture_dir)])))
+    t.start()
+    t.join(180)
+    try:
+        assert not t.is_alive(), "daemon kept running after a query failed"
+        assert rc == [1]
+        assert not spark.streams.active
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        t.join(60)
+
+
 def test_daemon_compact_mode(spark, tmp_path, monkeypatch):
     """`--compact` maintenance mode: folds both sink tables to their
     winning rows and exits 0 without needing a source; results stay

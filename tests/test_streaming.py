@@ -77,9 +77,24 @@ def _fixture_messages():
     return f1, f2
 
 
+def _write_part(d, i: int, msgs, seq: int, now: float) -> int:
+    """Write ``msgs`` as envelope file ``i`` of ``d`` with ``seq``
+    numbering from ``seq``; returns the next seq.  FileStreamSource
+    orders micro-batches by modification time, so file i gets a pinned
+    mtime strictly before file i+1's."""
+    import os
+
+    lines = [json.dumps({"topic": topic, "msg_type": mt,
+                         "payload": payload, "seq": seq + k})
+             for k, (topic, mt, payload) in enumerate(msgs)]
+    p = d / f"part-{i:03d}.jsonl"
+    p.write_text("\n".join(lines))
+    os.utime(p, (now + i * 10, now + i * 10))
+    return seq + len(msgs)
+
+
 @pytest.fixture()
 def fixture_dir(tmp_path):
-    import os
     import time as _time
 
     d = tmp_path / "wire"
@@ -87,17 +102,7 @@ def fixture_dir(tmp_path):
     seq = 0
     now = _time.time()
     for i, msgs in enumerate(_fixture_messages()):
-        lines = []
-        for topic, mt, payload in msgs:
-            lines.append(json.dumps(
-                {"topic": topic, "msg_type": mt, "payload": payload,
-                 "seq": seq}))
-            seq += 1
-        p = d / f"part-{i:03d}.jsonl"
-        p.write_text("\n".join(lines))
-        # FileStreamSource orders micro-batches by modification time;
-        # pin distinct mtimes so file i arrives strictly before i+1.
-        os.utime(p, (now + i * 10, now + i * 10))
+        seq = _write_part(d, i, msgs, seq, now)
     return str(d)
 
 
@@ -570,39 +575,25 @@ def test_pipeline_checkpoint_restart_incremental(spark, tmp_path):
     than recomputing from zero, and (c) leave the upsert sink equal
     to the batch pipeline over everything — the exactly-once resume
     story a production deployment depends on."""
-    import os
     import time as _time
 
     d = tmp_path / "wire"
     d.mkdir()
     f1, f2 = _fixture_messages()
-    seq = 0
     now = _time.time()
-
-    def write_file(i, msgs):
-        nonlocal seq
-        lines = []
-        for topic, mt, payload in msgs:
-            lines.append(json.dumps(
-                {"topic": topic, "msg_type": mt, "payload": payload,
-                 "seq": seq}))
-            seq += 1
-        p = d / f"part-{i:03d}.jsonl"
-        p.write_text("\n".join(lines))
-        os.utime(p, (now + i * 10, now + i * 10))
 
     out_path = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     cfg = PipelineConfig(mode="full", out_path=out_path, checkpoint=ckpt)
 
-    write_file(0, f1)
+    seq = _write_part(d, 0, f1, 0, now)
     run1 = build_streaming_pipeline(file_envelope_stream(spark, str(d)), cfg)
     for q in run1:
         assert q.awaitTermination(120), "run 1 did not finish"
     n_tick_run1 = read_sink_latest(spark, out_path, "tick").count()
     assert n_tick_run1 > 0
 
-    write_file(1, f2)
+    _write_part(d, 1, f2, seq, now)
     run2 = build_streaming_pipeline(file_envelope_stream(spark, str(d)), cfg)
     n_in_total = 0
     for q in run2:
@@ -644,6 +635,170 @@ def test_pipeline_checkpoint_restart_incremental(spark, tmp_path):
         for r in batch["book"].collect()
     }
     assert got_b == want_b
+
+
+def _tick_progress(queries):
+    """Progress of the stateful tick query's batches that read data."""
+    return [p for q in queries for p in q.recentProgress
+            if p["stateOperators"] and p["numInputRows"]]
+
+
+def test_streams_run_at_default_parallelism(spark, fixture_dir, tmp_path):
+    """Every stream starts at the cluster's defaultParallelism, not the
+    session's shuffle width (8 in this suite, 200 by default): the
+    stateful operator runs one state store per core.  The caller's
+    session keeps its own setting, and an unset one stays unset."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.sparkContext.defaultParallelism
+    assert spark.conf.get(key) != str(width)  # the check can tell
+    before = spark.conf.get(key)
+    cfg = PipelineConfig(mode="full", out_path=str(tmp_path / "sink"),
+                         checkpoint=str(tmp_path / "ckpt"), dlq=True)
+    queries = build_streaming_pipeline(
+        file_envelope_stream(spark, fixture_dir), cfg)
+    assert spark.conf.get(key) == before
+    for q in queries:
+        assert q.awaitTermination(120), "stream did not finish within 120s"
+    ticks = _tick_progress(queries)
+    assert ticks
+    assert all(p["stateOperators"][0]["numShufflePartitions"] == width
+               for p in ticks)
+
+    spark.conf.unset(key)
+    try:
+        cfg2 = PipelineConfig(mode="book", out_path=str(tmp_path / "sink2"),
+                              checkpoint=str(tmp_path / "ckpt2"))
+        for q in build_streaming_pipeline(
+                file_envelope_stream(spark, fixture_dir), cfg2):
+            assert q.awaitTermination(120)
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_checkpoint_keeps_its_shuffle_width(spark, tmp_path, monkeypatch):
+    """A checkpoint created at 8 shuffle partitions restarts at 8 even
+    though new streams start at defaultParallelism: Spark restores the
+    width from the offset log, so the state store stays readable and
+    the cumulative sums continue from the stored state."""
+    import time as _time
+
+    from level2_to_cassandra_spark.streaming import pipeline
+
+    d = tmp_path / "wire"
+    d.mkdir()
+    now = _time.time()
+    f1, f2 = _fixture_messages()
+    out_path = str(tmp_path / "sink")
+    cfg = PipelineConfig(mode="tick", out_path=out_path,
+                         checkpoint=str(tmp_path / "ckpt"))
+    assert spark.sparkContext.defaultParallelism != 8
+    seq = _write_part(d, 0, f1, 0, now)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "stream_shuffle_partitions", lambda s: 8)
+        run1 = build_streaming_pipeline(
+            file_envelope_stream(spark, str(d)), cfg)
+    for q in run1:
+        assert q.awaitTermination(120), "run 1 did not finish"
+    assert {p["stateOperators"][0]["numShufflePartitions"]
+            for p in _tick_progress(run1)} == {8}
+
+    _write_part(d, 1, f2, seq, now)
+    run2 = build_streaming_pipeline(file_envelope_stream(spark, str(d)), cfg)
+    for q in run2:
+        assert q.awaitTermination(120), "restart did not finish"
+    ticks2 = _tick_progress(run2)
+    assert ticks2
+    assert {p["stateOperators"][0]["numShufflePartitions"]
+            for p in ticks2} == {8}
+
+    want = {
+        (r.symbol, str(r.time), float(r.price)):
+            (r.volume, r.cumbuy, r.cumsell, r.cumdelta)
+        for r in build_batch_pipeline(
+            file_envelope_batch(spark, str(d)), cfg)["tick"].collect()
+    }
+    got = {
+        (r.symbol, str(r.time), float(r.price)):
+            (r.volume, r.cumbuy, r.cumsell, r.cumdelta)
+        for r in read_sink_latest(spark, out_path, "tick").collect()
+    }
+    assert got == want
+
+
+def test_stateful_fold_sorts_across_arrow_chunks(spark, tmp_path):
+    """A (symbol, day) group larger than one Arrow chunk reaches the
+    state function as several chunks in arrival order.  The running
+    sums must follow event time across ALL of them, as the batch
+    window does: 300 out-of-order ticks per group against 64-row
+    chunks."""
+    import random
+
+    rng = random.Random(11)
+    lines = []
+    for sym in ("AAA", "BBB"):
+        times = [DAY1 + 7 * i for i in range(300)]
+        rng.shuffle(times)
+        for t in times:
+            lines.append(json.dumps({
+                "topic": "btcusd", "msg_type": "TICK",
+                "payload": _tick(sym, t, rng.randint(1, 50),
+                                 rng.choice("BS")),
+                "seq": len(lines)}))
+    d = tmp_path / "wire"
+    d.mkdir()
+    (d / "part-000.jsonl").write_text("\n".join(lines))
+
+    out_path = str(tmp_path / "sink")
+    cfg = PipelineConfig(mode="tick", out_path=out_path,
+                         checkpoint=str(tmp_path / "ckpt"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        for q in build_streaming_pipeline(
+                file_envelope_stream(spark, str(d)), cfg):
+            assert q.awaitTermination(120), "stream did not finish"
+    finally:
+        spark.conf.set(key, before)
+
+    def rows(df):
+        return {(r.symbol, str(r.time)): (r.cumbuy, r.cumsell, r.cumdelta)
+                for r in df.collect()}
+
+    want = rows(tick_rows_batch(file_envelope_batch(spark, str(d)), cfg))
+    got = rows(read_sink_latest(spark, out_path, "tick"))
+    assert len(want) == 600
+    assert got == want
+
+
+def test_state_timeout_drops_idle_key():
+    """When an idle (symbol, day) key's TTL fires, Spark calls the
+    state function with no rows; the key must be removed, not
+    re-armed, or state grows by one key per symbol per day."""
+    from level2_to_cassandra_spark.streaming.state import (
+        _cum_update_factory,
+    )
+
+    class TimedOut:
+        hasTimedOut = True
+        exists = True
+        get = (5, 3)
+        removed = False
+
+        def remove(self):
+            self.removed = True
+
+        def update(self, value):
+            raise AssertionError("a timed-out key must not be updated")
+
+        def setTimeoutDuration(self, ms):
+            raise AssertionError("a timed-out key must not be re-armed")
+
+    st = TimedOut()
+    out = list(_cum_update_factory(36 * 3600 * 1000)(
+        ("AAA", "2024-01-01"), iter([]), st))
+    assert out == [] and st.removed
 
 
 def test_compact_sink_preserves_lww_and_future_wins(spark, tmp_path):
